@@ -1143,7 +1143,7 @@ SELECT vec_a, vec_b, score FROM scored WHERE score >= {EMB_DUP_THRESHOLD}
 # X29 — multimodal resize plan: aspect-fit dimension math stays in JVM
 # codegen (never upscale, floor at 1px); only the pixel transform pays
 # the Python/Arrow boundary, stubbed deterministically like x14's decode
-# (`multimodal.fake_resize`; real backend = `resize_stub`). The oracle
+# (`multimodal.fake_resize`). The oracle
 # hashes the byte-COUNT contract of the Arrow stage's real output
 # (octet_length(resized) == out_w*out_h), i.e. the plumbing is gated,
 # the pixel content is stub territory.

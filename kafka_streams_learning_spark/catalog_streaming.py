@@ -42,7 +42,7 @@ REPLAY_CHUNKS = 2
 # measured 1.7x faster than the 32-shard default on the interval join with
 # identical results. A 100 TB deployment raises spark.sql.shuffle.partitions
 # (or pins ksl.state.partitions) at session build; that always wins
-# (streaming/runner._ensure_state_parallelism).
+# (streaming/runner._state_partitions).
 STATE_SHARDS = 8
 ALERT_VALUE_THRESHOLD = 100.0  # events.value gate for s03 (~20% qualify)
 ALERT_AFTER = 3
@@ -175,13 +175,8 @@ def _s03(spark: SparkSession, sf: str) -> DataFrame:
         F.col("value").alias("amount"),
         "ts",
     )
-    # sharded arm since r13: fixture key cardinality grows with SF, and
-    # the per-key arm pays one Arrow invocation per distinct key per
-    # batch (sweep 9: 109.6 s vs 30.2 s at 1M events / 150k keys, rows
-    # bit-identical); parity across arms pinned by
-    # tests/test_streaming.py::test_sharded_fraud_arm_matches_per_key_arm
     alerts = stateful.fraud_alert_stream(
-        stream, "key", ALERT_VALUE_THRESHOLD, ALERT_AFTER, impl="sharded"
+        stream, "key", ALERT_VALUE_THRESHOLD, ALERT_AFTER
     )
     name = _fresh_name("s03_out")
     runner.run_to_memory(alerts, name, "append", state_partitions=STATE_SHARDS)

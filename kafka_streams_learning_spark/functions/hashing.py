@@ -33,12 +33,6 @@ def hash32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, _HEX_CHARS_32), 16, 10).cast("long")
 
 
-def seeded_hash60(col: Column, seed: int) -> Column:
-    """Family of independent 60-bit hash functions, indexed by seed —
-    the MinHash "permutations". h_seed(x) = hash60(seed || '|' || x)."""
-    return hash60(F.concat(F.lit(f"{seed}|"), col))
-
-
 def hash60_sql(expr: str) -> str:
     """DuckDB SQL text computing the same value as :func:`hash60`."""
     return f"CAST('0x' || substr(md5({expr}), 1, {_HEX_CHARS_60}) AS BIGINT)"
@@ -47,11 +41,6 @@ def hash60_sql(expr: str) -> str:
 def hash32_sql(expr: str) -> str:
     """DuckDB SQL text computing the same value as :func:`hash32`."""
     return f"CAST('0x' || substr(md5({expr}), 1, {_HEX_CHARS_32}) AS BIGINT)"
-
-
-def seeded_hash60_sql(expr: str, seed: int) -> str:
-    """DuckDB SQL mirror of :func:`seeded_hash60`."""
-    return hash60_sql(f"'{seed}|' || {expr}")
 
 
 # ---------------------------------------------------------------------------

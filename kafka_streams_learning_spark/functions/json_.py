@@ -1,8 +1,9 @@
 """JSON decode helpers.
 
 The reference decodes record values two ways (SURVEY §1.3): a generic
-Jackson POJO serde (`serdes/JsonPOJOSerde.java:10-39`) → here `from_json`
-with an explicit schema; and ad-hoc per-field extraction with a sentinel
+Jackson POJO serde (`serdes/JsonPOJOSerde.java:10-39`) → `from_json`
+with an explicit schema, used inline where a source decodes
+(`sources/kafka.py`); and ad-hoc per-field extraction with a sentinel
 key ``"UNKNOWN"`` for malformed JSON
 (`windows/tumbling/OrderCountTumblingWindow.java:65-74`) → here
 `get_json_object` + `coalesce`. Both stay JVM-side expressions.
@@ -23,9 +24,3 @@ def json_key_or_unknown(value: Column, field: str) -> Column:
     record must still count, under the sentinel key)."""
     return F.coalesce(F.get_json_object(value, f"$.{field}"), F.lit(UNKNOWN_KEY))
 
-
-def decode_json(value: Column, schema) -> Column:
-    """Jackson-POJO-equivalent full decode: `from_json` with a StructType.
-    Parse failure yields NULL (the serde's deserialization-exception path,
-    `serdes/JsonPOJOSerde.java:30-38`); callers drop or route nulls."""
-    return F.from_json(value, schema)

@@ -9,8 +9,9 @@ record onward (`:61`).
 Batch/exact form: a running count window function over qualifying records,
 filtered to running > alert_after. Deterministic ordering requires a
 tiebreaker column (the reference's ordering is arrival order; batch pins it
-to (ts, unique id)). The streaming per-record-emission form lives in
-`streaming/stateful.py` (transformWithStateInPandas).
+to (ts, unique id)). The streaming per-record-emission form is
+`streaming/stateful.fraud_alert_stream` (`applyInPandasWithState` over
+bounded key shards).
 
 Window function note for scale: the partition key is the customer, so state
 per task is one partition's customers — no global sort, one shuffle.

@@ -63,15 +63,6 @@ def enrich_join(
     return facts.join(d, on=on, how=how)
 
 
-def enriched_struct(facts_cols: list[str], dim_cols: list[str]) -> list[Column]:
-    """Nested EnrichedOrder-shaped projection (`models/EnrichedOrder.java:5-6`,
-    SURVEY §2.13 Q12): two struct columns, order + dimension."""
-    return [
-        F.struct(*[F.col(c) for c in facts_cols]).alias("fact"),
-        F.struct(*[F.col(c) for c in dim_cols]).alias("dim"),
-    ]
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

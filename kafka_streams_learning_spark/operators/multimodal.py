@@ -270,14 +270,6 @@ def aspect_fit(
     )
 
 
-def resize_stub(*_args, **_kwargs):
-    """Real pixel resampling — requires image libs not present here."""
-    raise NotImplementedError(
-        "image resize requires codec/pixel libraries not available in "
-        "this environment; use fake_resize for pipeline testing"
-    )
-
-
 def fake_resize(df: DataFrame, blob_col: str = "blob", id_col: str = "id") -> DataFrame:
     """Deterministic resize stand-in with the production plumbing:
     mapInPandas over Arrow batches, explicit output schema, and the REAL

@@ -43,23 +43,8 @@ def read_schema(df: DataFrame) -> str:
     )
 
 
-def uses_broadcast_join(df: DataFrame) -> bool:
-    return plan_has(df, "BroadcastHashJoin") or plan_has(df, "BroadcastNestedLoopJoin")
-
-
 def has_cartesian(df: DataFrame) -> bool:
     return plan_has(df, "CartesianProduct")
-
-
-def codegen_stages(df: DataFrame) -> int:
-    """Distinct whole-stage-codegen stages. NB under AQE the pre-execution
-    plan carries no codegen annotation — this is meaningful on sessions
-    with AQE off, or after execution."""
-    import re
-
-    plan = formatted_plan(df)
-    ids = set(re.findall(r"codegen id : (\d+)", plan))
-    return len(ids) or plan.count("WholeStageCodegen")
 
 
 def exchange_count(df: DataFrame) -> int:

@@ -8,16 +8,18 @@
 - run_collect_batches — foreachBatch capture of each micro-batch's rows:
   the observable emission sequence (KTable changelog semantics,
   `StreamsOrderCount.java:130-134`).
-- to_console — the reference's ubiquitous `.foreach(print)` sink.
 """
 
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 _SPARK_DEFAULT_SHUFFLE_PARTITIONS = "200"
+_ARROW_BATCH_ROWS = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 # Shard-count derivation target (VERDICT r14 item 4): shard count is a
 # state-SIZE decision — every shard is a live RocksDB instance paying an
@@ -54,17 +56,38 @@ def _checkpoint() -> str:
     return run_staging_dir("ckpt")
 
 
-def _ensure_state_parallelism(
+@contextmanager
+def _scoped_conf(spark: SparkSession, overrides: dict[str, str | None]):
+    """Set each non-None override for one query's lifetime, then restore
+    the key's prior session value — or unset it when the session never
+    set it — so no run leaks its sizing into the queries after it."""
+    overrides = {k: v for k, v in overrides.items() if v is not None}
+    prior = {k: spark.conf.get(k, None) for k in overrides}
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _state_partitions(
     spark: SparkSession, state_partitions: int | None = None
-) -> None:
-    """Size stateful-stream parallelism to the cluster, not Spark's static
-    default. `spark.sql.shuffle.partitions` fixes the state-store partition
-    count at first checkpoint, and AQE does NOT coalesce stateful streaming
-    shuffles — a vanilla session's 200 partitions means 200 state stores
-    per operator (measured 3-4x slower micro-batches on local[32] at
-    sf0.01). Only overrides the untouched default, so a deliberately tuned
-    session is left alone; on a real cluster defaultParallelism is the
-    executor-core count, which is the right state shard count.
+) -> str | None:
+    """The `spark.sql.shuffle.partitions` a stateful stream should start
+    with, or None to keep the session's value. Sizes stateful-stream
+    parallelism to the cluster, not Spark's static default: the setting
+    fixes the state-store partition count at first checkpoint, and AQE
+    does NOT coalesce stateful streaming shuffles — a vanilla session's
+    200 partitions means 200 state stores per operator (measured 3-4x
+    slower micro-batches on local[32] at sf0.01). Only the untouched
+    default is replaced, so a deliberately tuned session is left alone;
+    on a real cluster defaultParallelism is the executor-core count,
+    which is the right state shard count.
 
     A session that was EXPLICITLY configured (builder/spark-submit conf)
     is never overridden, even to exactly 200 — that intent is visible in
@@ -83,34 +106,32 @@ def _ensure_state_parallelism(
     buys pure fixed cost. Target ~10-100 MB of state per shard, floored
     at enough shards to spread hot keys. A user pin via
     `ksl.state.partitions` still beats it."""
-    key = "spark.sql.shuffle.partitions"
     pinned = spark.conf.get("ksl.state.partitions", None)
     if pinned is not None:
-        spark.conf.set(key, pinned)  # explicit engine-level opt-out
-        return
+        return pinned  # explicit engine-level opt-out
     if state_partitions is not None:
-        spark.conf.set(key, str(state_partitions))
-        return
-    if spark.sparkContext.getConf().contains(key):
-        return  # explicitly configured at session build — respect it
-    if spark.conf.get(key) == _SPARK_DEFAULT_SHUFFLE_PARTITIONS:
-        target = str(spark.sparkContext.defaultParallelism)
-        import logging
+        return str(state_partitions)
+    if spark.sparkContext.getConf().contains(_SHUFFLE_PARTITIONS):
+        return None  # explicitly configured at session build — respect it
+    if spark.conf.get(_SHUFFLE_PARTITIONS) != _SPARK_DEFAULT_SHUFFLE_PARTITIONS:
+        return None
+    target = str(spark.sparkContext.defaultParallelism)
+    import logging
 
-        logging.getLogger(__name__).warning(
-            "overriding %s=200 (Spark default) with defaultParallelism=%s "
-            "for streaming state sizing; set it in the session builder to "
-            "pin a deliberate value", key, target,
-        )
-        spark.conf.set(key, target)
+    logging.getLogger(__name__).warning(
+        "overriding %s=200 (Spark default) with defaultParallelism=%s "
+        "for streaming state sizing; set it in the session builder to "
+        "pin a deliberate value", _SHUFFLE_PARTITIONS, target,
+    )
+    return target
 
 
 def _plan_uses_keyed_state(df: DataFrame) -> bool:
     """True iff the analyzed plan contains a shard-keyed custom-state
-    operator (`applyInPandasWithState`/`transformWithStateInPandas`
-    grouped on the `_shard` column). Per-key keyed state (fraud alerts)
-    has no shard-count restart invariant, so it is deliberately NOT
-    matched — the warning would be noise there."""
+    operator (`applyInPandasWithState` grouped on the `_shard` column).
+    Keyed state grouped on a user key has no shard-count restart
+    invariant, so it is deliberately NOT matched — the warning would be
+    noise there."""
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
     except Exception:  # plan introspection is best-effort diagnostics
@@ -151,7 +172,6 @@ def run_to_memory(
     doubling overflows Int there and falls back to copy-per-write).
     Narrow rows (a few int64s) tolerate large values cheaply."""
     spark = df.sparkSession
-    _ensure_state_parallelism(spark, state_partitions)
     ckpt = checkpoint or _checkpoint()
     if shard_count is None:
         shard_count = getattr(df, "_ksl_shard_count", None)
@@ -171,11 +191,12 @@ def run_to_memory(
             "will silently orphan state — pass shard_count=n_shards",
             ckpt,
         )
-    arrow_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prior_arrow = spark.conf.get(arrow_key, None)
-    if arrow_batch_rows is not None:
-        spark.conf.set(arrow_key, str(arrow_batch_rows))
-    try:
+    overrides = {
+        _SHUFFLE_PARTITIONS: _state_partitions(spark, state_partitions),
+        _ARROW_BATCH_ROWS: None if arrow_batch_rows is None
+        else str(arrow_batch_rows),
+    }
+    with _scoped_conf(spark, overrides):
         q = (
             df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -186,14 +207,6 @@ def run_to_memory(
         q.processAllAvailable()
         q.stop()
         q.awaitTermination()
-    finally:
-        if arrow_batch_rows is not None:
-            if prior_arrow is not None:
-                spark.conf.set(arrow_key, prior_arrow)
-            else:
-                # the session never set the key — unset instead of leaving
-                # this run's override leaked session-wide
-                spark.conf.unset(arrow_key)
 
 
 def run_collect_batches(
@@ -203,28 +216,21 @@ def run_collect_batches(
 ) -> list[list]:
     """Run to completion, capturing each micro-batch's emitted rows in
     order — the update-mode emission sequence as observable behavior."""
-    _ensure_state_parallelism(df.sparkSession)
+    spark = df.sparkSession
     batches: list[list] = []
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         batches.append(batch_df.collect())
 
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint or _checkpoint())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
+    with _scoped_conf(spark, {_SHUFFLE_PARTITIONS: _state_partitions(spark)}):
+        q = (
+            df.writeStream.outputMode(output_mode)
+            .foreachBatch(_sink)
+            .option("checkpointLocation", checkpoint or _checkpoint())
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        q.awaitTermination()
     return batches
 
-
-def to_console(df: DataFrame, output_mode: str = "update", label: str | None = None):
-    """Console sink (`.print(Printed.toSysOut().withLabel(...))`,
-    `OrderCountTumblingWindow.java:81-82`). Returns the running query."""
-    w = df.writeStream.outputMode(output_mode).format("console")
-    if label:
-        w = w.queryName(label)
-    return w.option("checkpointLocation", _checkpoint()).start()

@@ -10,14 +10,12 @@ executors and checkpointed (the changelog-topic equivalent,
 `FraudProcessor.java:22`); each micro-batch touches only the keys present
 in the batch, Arrow-batched — no per-row Python round-trips.
 
-Implementation: `applyInPandasWithState` (stable since Spark 3.4).
-Spark 4's `transformWithStateInPandas` is the successor API; it requires
-the protobuf package at the Python worker, which this container lacks, so
-`fraud_alert_stream_tws` is provided but gated behind an import check.
+Implementation: `applyInPandasWithState` (stable since Spark 3.4), keyed
+on a bounded shard id rather than the customer key.
 
 Operational contracts (apply to every shard-keyed operator below —
-`sliding_count_stream`, `asof_join_stream`, `ordered_sliding_count_stream`,
-`ordered_asof_join_stream`):
+`fraud_alert_stream`, `sliding_count_stream`, `asof_join_stream`,
+`ordered_sliding_count_stream`, `ordered_asof_join_stream`):
 
 - **Shard count is part of the checkpoint format.** The state key is
   `hash(user_id) % n_shards`; restarting an existing checkpoint with a
@@ -56,111 +54,6 @@ from pyspark.sql.streaming.state import GroupState
 ALERT_OUTPUT_SCHEMA = (
     "key string, record_id long, amount double, running_cnt long, alert string"
 )
-_STATE_SCHEMA = "cnt long"
-
-
-def _alert_walk(
-    key_val, cnt: int, pdf: pd.DataFrame, threshold: float, alert_after: int
-) -> tuple[int, pd.DataFrame | None]:
-    """The alert walk shared by BOTH stateful-API arms
-    (`applyInPandasWithState` and `transformWithStateInPandas`), so the
-    arms cannot drift. A key's micro-batch is sorted by ts/id — the
-    streaming analogue of the batch oracle's ORDER BY. The counter is a
-    pure running count over qualifying rows, so the walk vectorizes:
-    threshold filter, then cumsum offset by the checkpointed count — no
-    per-row Python. Returns (new_count, alert frame or None)."""
-    import numpy as np
-
-    pdf = pdf.sort_values(["ts", "record_id"])
-    amounts = pdf["amount"].to_numpy(dtype="float64")
-    qual = pdf[amounts >= threshold]  # below-gate records don't count (:41-43)
-    running = cnt + np.arange(1, len(qual) + 1, dtype="int64")
-    cnt += len(qual)
-    fire = running > alert_after  # strictly >, fires from the 4th (:61)
-    if not fire.any():
-        return cnt, None
-    rc = running[fire]
-    return cnt, pd.DataFrame(
-        {
-            "key": key_val,
-            "record_id": qual["record_id"].to_numpy(dtype="int64")[fire],
-            "amount": qual["amount"].to_numpy(dtype="float64")[fire],
-            "running_cnt": rc,
-            "alert": (
-                f"High-value order streak for {key_val}: "
-                + pd.Series(rc).astype(str)
-                + f" orders >= {threshold:.0f}"
-            ).to_numpy(),
-        }
-    )
-
-
-def _alert_fn(threshold: float, alert_after: int):
-    def fn(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        cnt = state.get[0] if state.exists else 0
-        # concat chunks BEFORE sorting — a key's micro-batch may span
-        # multiple Arrow chunks (per-chunk sorts would interleave)
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        cnt, out = _alert_walk(key[0], cnt, pdf, threshold, alert_after)
-        state.update((cnt,))
-        if out is not None:
-            yield out
-
-    return fn
-
-
-def fraud_alert_stream(
-    df: DataFrame,
-    key_col: str,
-    threshold: float,
-    alert_after: int = 3,
-    impl: str = "auto",
-    n_shards: int | None = None,
-) -> DataFrame:
-    """Streaming fraud alerts over a stream with columns
-    (key_col, record_id, amount, ts). Emits one alert row per qualifying
-    record from the (alert_after+1)-th onward, exactly once per record.
-    Null-keyed records are DROPPED at entry in every arm — the Kafka
-    Streams groupByKey semantics (ref
-    processor/FraudDetectionApp.java:104 groups by user id; Kafka
-    Streams discards null-key records at repartition/groupBy). Before
-    r14 the apply/tws arms processed a null key as an ordinary group
-    while the sharded arm raised from `_pack_str` mid-batch (ADVICE r13)
-    — the entry filter restores the "impl can never change emitted
-    rows" contract.
-
-    `impl` selects the state API: "apply" = `applyInPandasWithState`
-    (works everywhere), "tws" = `transformWithStateInPandas` (Spark ≥ 4
-    successor, needs protobuf on workers), "sharded" = the bounded-shard
-    re-keying (`fraud_alert_stream_sharded` — invocations O(shards ×
-    batches) instead of O(distinct keys × batches); the r13 sweep-9 arm
-    for high key cardinality), "auto" (default) = tws when protobuf is
-    importable, else apply (VERDICT r10 item 8). The apply/tws arms walk
-    the identical `_alert_walk` core; the sharded arm's parity with them
-    is pinned by tests + the skew probe, so the choice can never change
-    emitted rows. `n_shards` sizes the sharded arm (default
-    `REORDER_SHARDS`); it is ignored by the per-key arms, whose state
-    key is the user key itself."""
-    from pyspark.sql import functions as F
-
-    if impl not in ("auto", "apply", "tws", "sharded"):
-        raise ValueError(f"impl must be auto|apply|tws|sharded, got {impl!r}")
-    df = df.where(F.col(key_col).isNotNull())
-    if impl == "sharded":
-        return fraud_alert_stream_sharded(
-            df, key_col, threshold, alert_after, n_shards=n_shards
-        )
-    if impl == "tws" or (impl == "auto" and _has_protobuf()):
-        return fraud_alert_stream_tws(df, key_col, threshold, alert_after)
-    return df.groupBy(key_col).applyInPandasWithState(
-        _alert_fn(threshold, alert_after),
-        outputStructType=ALERT_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
 
 
 # How many reorder-buffer shards a stream is re-keyed onto. The r10
@@ -184,14 +77,13 @@ _SHARDED_ALERT_STATE_SCHEMA = "keys binary, cnts binary"
 
 def _sharded_alert_fn(threshold: float, alert_after: int,
                       max_state_bytes: int):
-    """Shard-group walk for `fraud_alert_stream_sharded`: the whole
-    shard's micro-batch in ONE vectorized pass (sort by (key, ts,
-    record_id), segmented cumsum of qualifying rows offset by each key's
+    """Shard-group walk for `fraud_alert_stream`: the whole shard's
+    micro-batch in ONE vectorized pass (sort by (key, ts, record_id),
+    segmented cumsum of qualifying rows offset by each key's
     checkpointed count), so invocations are O(shards × batches) instead
-    of O(distinct keys × batches). Emitted rows are bit-identical to
-    `_alert_walk`'s per-key output: the per-key row order inside a
-    (key, ts, record_id) sort IS _alert_walk's (ts, record_id) sort, and
-    counts are per-key affairs — keys can't interact."""
+    of O(distinct keys × batches). Counts are per-key affairs — keys
+    sharing a shard can't interact — so each key's rows are walked in
+    (ts, record_id) order exactly as a per-key operator would."""
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
         import numpy as np
@@ -275,33 +167,37 @@ def _sharded_alert_fn(threshold: float, alert_after: int,
     return fn
 
 
-def fraud_alert_stream_sharded(
+def fraud_alert_stream(
     df: DataFrame,
     key_col: str,
     threshold: float,
     alert_after: int = 3,
+    impl: str = "sharded",
     n_shards: int | None = None,
-    _max_state_bytes: int | None = None,
 ) -> DataFrame:
-    """`fraud_alert_stream` re-keyed onto `n_shards` bounded shards —
-    the high-key-cardinality arm (r13 sweep 9 measured the per-key arm
-    at ~200 µs per distinct key per batch: 170 s at 1M events over 150k
-    keys, where this arm's invocation count is shard-bound). Emits the
-    same rows as the per-key arm; parity pinned by
-    tests/test_streaming.py and the r13 skew measurements.
+    """Streaming fraud alerts over a stream with columns
+    (key_col, record_id, amount, ts). Emits one alert row per qualifying
+    record from the (alert_after+1)-th onward, exactly once per record.
+    Null-keyed records are DROPPED at entry — the Kafka Streams
+    groupByKey semantics (ref processor/FraudDetectionApp.java:104
+    groups by user id; Kafka Streams discards null-key records at
+    repartition/groupBy) — so a null key never reaches `_pack_str`.
 
-    Same arrival-order contract as the per-key arm (each micro-batch is
-    walked in (ts, record_id) order per key; cross-batch order is
-    arrival order), and the same restart invariant as every shard-keyed
-    operator: `n_shards` is part of the checkpoint format
-    (`pin_shard_count` — auto-pinned via the output tag)."""
+    Records are re-keyed onto `n_shards` bounded shards (default
+    `REORDER_SHARDS`), so `applyInPandasWithState` invocations are
+    O(shards × batches), independent of key cardinality (r13 sweep 9:
+    a per-key operator paid ~200 µs per distinct key per batch, 109.6 s
+    vs 30.2 s at 1M events over 150k keys). Each micro-batch is walked
+    in (ts, record_id) order per key; cross-batch order is arrival
+    order. `n_shards` is part of the checkpoint format
+    (`pin_shard_count` — auto-pinned via the output tag). `impl` accepts
+    only "sharded", the one implementation; any other value raises."""
     from pyspark.sql import functions as F
 
+    if impl != "sharded":
+        raise ValueError(f"impl must be 'sharded', got {impl!r}")
     if n_shards is None:
         n_shards = REORDER_SHARDS
-    # same null-key drop as the fraud_alert_stream entry (ADVICE r13):
-    # direct callers of the sharded arm get identical semantics, and a
-    # null key can no longer reach _pack_str mid-batch
     base = df.where(F.col(key_col).isNotNull()).select(
         F.col(key_col).cast("string").alias("key"),
         "record_id", "amount", "ts",
@@ -313,8 +209,7 @@ def fraud_alert_stream_sharded(
         .groupBy("_shard")
         .applyInPandasWithState(
             _sharded_alert_fn(
-                threshold, alert_after,
-                _max_state_bytes or MAX_STATE_BYTES_PER_SHARD,
+                threshold, alert_after, MAX_STATE_BYTES_PER_SHARD
             ),
             outputStructType=ALERT_OUTPUT_SCHEMA,
             stateStructType=_SHARDED_ALERT_STATE_SCHEMA,
@@ -1089,60 +984,4 @@ def ordered_asof_join_stream(
             timeoutConf="EventTimeTimeout",
         ),
         n_shards,
-    )
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def fraud_alert_stream_tws(
-    df: DataFrame,
-    key_col: str,
-    threshold: float,
-    alert_after: int = 3,
-) -> DataFrame:
-    """transformWithStateInPandas variant (Spark ≥ 4 successor API —
-    richer state types, timers, TTL). Same semantics as
-    `fraud_alert_stream`; requires the protobuf package on workers."""
-    if not _has_protobuf():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package on "
-            "Python workers, which is not installed in this environment; "
-            "use fraud_alert_stream (applyInPandasWithState) instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    threshold_ = threshold
-    alert_after_ = alert_after
-
-    class FraudAlertProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.count = handle.getValueState("qualifying_count", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            cnt = self.count.get()[0] if self.count.exists() else 0
-            # the exact walk of the shipped arm — shared code, no drift
-            pdf = pd.concat(list(rows), ignore_index=True)
-            cnt, out = _alert_walk(key[0], cnt, pdf, threshold_, alert_after_)
-            self.count.update((cnt,))
-            if out is not None:
-                yield out
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=FraudAlertProcessor(),
-        outputStructType=ALERT_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
     )

@@ -142,33 +142,49 @@ def test_stateful_fraud_alerts_across_batches(spark, tmpdir):
     assert all("High-value order streak" in r.alert for b in batches for r in b)
 
 
+ALERT_COLS = ("key", "record_id", "amount", "running_cnt")
+
+
+def _batch_alerts(spark, chunks):
+    """Batch reference for `fraud_alert_stream`: `fraud.running_alerts`
+    over the union of the staged chunks. Chunk timestamps rise
+    monotonically, so the (ts, record_id) order equals arrival order."""
+    from kafka_streams_learning_spark.operators import fraud
+
+    df = spark.createDataFrame([r for c in chunks for r in c], EVENTS_SCHEMA)
+    out = fraud.running_alerts(
+        df, "key", F.col("amount"), 500.0, order_by=["ts", "record_id"]
+    )
+    return sorted(map(tuple, out.select(*ALERT_COLS).collect()))
+
+
+def _stream_alerts(spark, chunks, d, n_shards):
+    stage_explicit_chunks(spark, chunks, EVENTS_SCHEMA, d)
+    out = stateful.fraud_alert_stream(
+        replay_stream(spark, d, EVENTS_SCHEMA), "key",
+        threshold=500.0, n_shards=n_shards,
+    )
+    name = "fraud_" + d.rsplit("/", 1)[-1]
+    runner.run_to_memory(out, name, "append")
+    return sorted(map(tuple, spark.table(name).select(*ALERT_COLS).collect()))
+
+
 def test_sharded_fraud_arm_matches_per_key_arm(spark, tmpdir):
-    """`fraud_alert_stream_sharded` (r13, the high-key-cardinality arm)
-    must emit exactly the per-key arm's rows: multi-key batches, a key's
-    counter carried across micro-batches, below-threshold rows skipped,
-    several keys colliding into one shard, and keys unseen by the state
-    yet. Deterministic small replay + a randomized 60-key replay."""
+    """The shard-keyed `fraud_alert_stream` must emit exactly the rows of
+    the per-key batch reference (`running_alerts`, a window partitioned
+    by key): multi-key batches, a key's counter carried across
+    micro-batches, below-threshold rows skipped, several keys colliding
+    into one shard, and keys unseen by the state yet. Deterministic small
+    replay + a randomized 60-key replay."""
     import random
 
     base = ts("2024-01-01T00:00:00")
 
     def run(chunks, tag, n_shards):
-        d = f"{tmpdir}/{tag}"
-        stage_explicit_chunks(spark, chunks, EVENTS_SCHEMA, d)
-        per_key = stateful.fraud_alert_stream(
-            replay_stream(spark, d, EVENTS_SCHEMA), "key",
-            threshold=500.0, impl="apply",
-        )
-        runner.run_to_memory(per_key, f"pk_{tag}", "append")
-        sharded = stateful.fraud_alert_stream_sharded(
-            replay_stream(spark, d, EVENTS_SCHEMA), "key",
-            threshold=500.0, n_shards=n_shards,
-        )
-        runner.run_to_memory(sharded, f"sh_{tag}", "append")
-        a = sorted(map(tuple, spark.table(f"pk_{tag}").collect()))
-        b = sorted(map(tuple, spark.table(f"sh_{tag}").collect()))
-        assert a == b and a, f"{tag}: sharded arm diverged (or emitted nothing)"
-        return a
+        got = _stream_alerts(spark, chunks, f"{tmpdir}/{tag}", n_shards)
+        want = _batch_alerts(spark, chunks)
+        assert got == want and got, f"{tag}: stream diverged (or emitted nothing)"
+        return got
 
     mk = lambda k, i, amt: (k, i, amt, base + dt.timedelta(minutes=i))
     got = run(
@@ -180,8 +196,9 @@ def test_sharded_fraud_arm_matches_per_key_arm(spark, tmpdir):
         ],
         "det", n_shards=2,  # 2 shards × many keys → forced collisions
     )
-    # spot-pin the semantic, not just arm parity: a's 4th qualifying
-    # record is id 7; b qualifies at 2,5,8,9,10 so fires at 9 and 10
+    # spot-pin the semantic, not just reference parity: a's 4th
+    # qualifying record is id 7; b qualifies at 2,5,8,9,10 so fires at 9
+    # and 10
     assert {(r[0], r[1], r[3]) for r in got} == {
         ("a", 7, 4), ("b", 9, 4), ("b", 10, 5),
     }
@@ -199,11 +216,9 @@ def test_sharded_fraud_arm_matches_per_key_arm(spark, tmpdir):
 
 
 def test_fraud_alert_null_keys_dropped_in_every_arm(spark, tmpdir):
-    """ADVICE r13: the apply/tws arms used to process a null key as an
-    ordinary group while the sharded arm raised from _pack_str mid-batch
-    — impl choice changed behavior on null keys. All arms now DROP
-    null-keyed records at entry (Kafka Streams groupByKey semantics), so
-    the arms stay bit-identical on dirty input too."""
+    """ADVICE r13: null-keyed records are DROPPED at entry (Kafka Streams
+    groupByKey semantics) instead of reaching `_pack_str` mid-batch; the
+    output equals the batch reference over the non-null-keyed rows."""
     base = ts("2024-01-01T00:00:00")
     mk = lambda k, i, amt: (k, i, amt, base + dt.timedelta(minutes=i))
     chunks = [
@@ -211,39 +226,33 @@ def test_fraud_alert_null_keys_dropped_in_every_arm(spark, tmpdir):
          mk(None, 4, 900.0)],
         [mk("a", 5, 950.0), mk(None, 6, 990.0), mk("a", 7, 990.0)],
     ]
-    results = {}
-    for impl, n_shards in (("apply", None), ("sharded", 2)):
-        d = f"{tmpdir}/null_{impl}"
-        stage_explicit_chunks(spark, chunks, EVENTS_SCHEMA, d)
-        out = stateful.fraud_alert_stream(
-            replay_stream(spark, d, EVENTS_SCHEMA), "key",
-            threshold=500.0, impl=impl, n_shards=n_shards,
-        )
-        runner.run_to_memory(out, f"null_{impl}", "append")
-        results[impl] = sorted(map(tuple, spark.table(f"null_{impl}").collect()))
-    # a qualifies at 1,3,5,7 → fires at id 7 (4th); the null key would
-    # have qualified at 2,4,6 — had it formed a group, the apply arm
-    # would emit nothing extra here, so ALSO pin that no null key ever
-    # appears and that the sharded arm no longer raises
-    assert results["apply"] == results["sharded"]
-    assert {(r[0], r[1], r[3]) for r in results["apply"]} == {("a", 7, 4)}
-    assert all(r[0] is not None for r in results["apply"])
+    got = _stream_alerts(spark, chunks, f"{tmpdir}/null", n_shards=2)
+    keyed = [[r for r in c if r[0] is not None] for c in chunks]
+    assert got == _batch_alerts(spark, keyed)
+    # a qualifies at 1,3,5,7 → fires at id 7 (4th); no null key appears
+    assert {(r[0], r[1], r[3]) for r in got} == {("a", 7, 4)}
 
 
 def test_fraud_alert_stream_threads_n_shards(spark, tmpdir):
-    """ADVICE r13: fraud_alert_stream(impl="sharded") must forward
-    n_shards to the sharded arm (callers used to have to bypass the impl
-    switch). Pin via the shard-count tag the runner consumes."""
+    """ADVICE r13: fraud_alert_stream must forward n_shards to its shard
+    re-keying — pinned via the shard-count tag the runner consumes.
+    `impl` accepts only "sharded", the one implementation; any other
+    value is rejected loudly."""
     d = f"{tmpdir}/nshards"
     base = ts("2024-01-01T00:00:00")
     stage_explicit_chunks(
         spark, [[("a", 1, 600.0, base)]], EVENTS_SCHEMA, d
     )
+    stream = replay_stream(spark, d, EVENTS_SCHEMA)
     out = stateful.fraud_alert_stream(
-        replay_stream(spark, d, EVENTS_SCHEMA), "key",
-        threshold=500.0, impl="sharded", n_shards=7,
+        stream, "key", threshold=500.0, impl="sharded", n_shards=7,
     )
     assert out._ksl_shard_count == 7
+    out = stateful.fraud_alert_stream(stream, "key", threshold=500.0)
+    assert out._ksl_shard_count == stateful.REORDER_SHARDS
+    for impl in ("auto", "apply", "tws", "rocksdb"):
+        with pytest.raises(ValueError, match="impl"):
+            stateful.fraud_alert_stream(stream, "key", 500.0, impl=impl)
 
 
 ASOF_SCHEMA = "event_id long, user_id long, ts timestamp, event_type string"
@@ -601,39 +610,11 @@ def test_ktable_upsert_is_incremental_by_bucket(spark, tmpdir):
     assert all(got[k] == f"old-{k}" for k in untouched)
 
 
-def test_stateful_checkpoint_recovery(spark, tmpdir):
-    """§5.2-5 for the custom stateful operator: the per-key counter in
-    applyInPandasWithState state survives a restart — alerts continue
-    from the persisted count, without re-emitting or double-counting."""
-    base = ts("2024-01-01T00:00:00")
-    data_dir = tmpdir + "/data"
-    ckpt = tmpdir + "/ckpt"
-    mk = lambda i, amt: ("c1", i, amt, base + dt.timedelta(minutes=i))
-    # run 1: three qualifying records — state cnt=3, no alerts yet
-    stage_explicit_chunks(
-        spark, [[mk(1, 600.0), mk(2, 700.0)], [mk(3, 800.0)]], EVENTS_SCHEMA, data_dir
-    )
-    stream = replay_stream(spark, data_dir, EVENTS_SCHEMA)
-    alerts = stateful.fraud_alert_stream(stream, "key", threshold=500.0)
-    run1 = runner.run_collect_batches(alerts, "append", checkpoint=ckpt)
-    assert [r for b in run1 for r in b] == []
-
-    # the query dies; two more qualifying records arrive
-    stage_explicit_chunks(
-        spark, [[mk(4, 900.0), mk(5, 950.0)]], EVENTS_SCHEMA, data_dir + "/chunk=99999-extra"
-    )
-    stream2 = replay_stream(spark, data_dir, EVENTS_SCHEMA)
-    alerts2 = stateful.fraud_alert_stream(stream2, "key", threshold=500.0)
-    run2 = runner.run_collect_batches(alerts2, "append", checkpoint=ckpt)
-    flat = [(r.record_id, r.running_cnt) for b in run2 for r in b]
-    # counts resume at 4 and 5 — state restored, records 1-3 not replayed
-    assert flat == [(4, 4), (5, 5)]
-
-
 def test_sharded_fraud_checkpoint_recovery(spark, tmpdir):
-    """Kill-and-resume for the SHARDED fraud arm (r13): its packed
-    (keys, cnts) binary state must survive a restart — counters resume
-    across MULTIPLE keys in one shard, records from run 1 are not
+    """§5.2-5 for the fraud alert operator: its packed (keys, cnts)
+    binary state must survive a restart — counters resume across
+    MULTIPLE keys in one shard, alerts continue from the persisted count
+    without re-emitting or double-counting, records from run 1 are not
     replayed, and a pinned checkpoint refuses a mismatched shard count."""
     base = ts("2024-01-01T00:00:00")
     data_dir = tmpdir + "/data"
@@ -646,24 +627,25 @@ def test_sharded_fraud_checkpoint_recovery(spark, tmpdir):
          [mk("a", 4, 900.0), mk("b", 5, 950.0)]],
         EVENTS_SCHEMA, data_dir,
     )
-    alerts = stateful.fraud_alert_stream_sharded(
+    alerts = stateful.fraud_alert_stream(
         replay_stream(spark, data_dir, EVENTS_SCHEMA), "key",
         threshold=500.0, n_shards=2,
     )
     # the memory sink can't recover a checkpoint — use the foreachBatch
-    # runner (as the per-key recovery test does) and pin manually, as a
-    # direct writeStream user would
+    # runner and pin manually, as a direct writeStream user would
     run1 = runner.run_collect_batches(alerts, "append", checkpoint=ckpt)
     assert [r for b in run1 for r in b] == []
     stateful.pin_shard_count(ckpt, 2)
 
-    # the query dies; more records arrive (one per key + a low-value)
+    # the query dies; more records arrive (a low-value, then one for a
+    # and two for b)
     stage_explicit_chunks(
         spark,
-        [[mk("a", 6, 100.0), mk("a", 7, 960.0), mk("b", 8, 970.0)]],
+        [[mk("a", 6, 100.0), mk("a", 7, 960.0), mk("b", 8, 970.0),
+          mk("b", 9, 980.0)]],
         EVENTS_SCHEMA, data_dir + "/chunk=99999-extra",
     )
-    alerts2 = stateful.fraud_alert_stream_sharded(
+    alerts2 = stateful.fraud_alert_stream(
         replay_stream(spark, data_dir, EVENTS_SCHEMA), "key",
         threshold=500.0, n_shards=2,
     )
@@ -671,8 +653,8 @@ def test_sharded_fraud_checkpoint_recovery(spark, tmpdir):
     got = sorted(
         (r.key, r.record_id, r.running_cnt) for b in run2 for r in b
     )
-    # a resumes at 3 (no alert: 3 is not > 3); b resumes at 4 → alert
-    assert got == [("b", 8, 4)]
+    # a resumes at 3 (no alert: 3 is not > 3); b resumes at 4 and 5
+    assert got == [("b", 8, 4), ("b", 9, 5)]
 
     # restarting the same checkpoint with a different shard count is the
     # orphaned-state hazard — the pin must refuse it
@@ -719,18 +701,38 @@ def test_state_partitions_opt_out_conf_pins_value(spark):
     """`ksl.state.partitions` is the engine-level escape hatch for the one
     case the builder-conf check cannot see (a deliberate 200 set on a
     reused context): it is consulted first and always wins."""
-    from kafka_streams_learning_spark.streaming.runner import (
-        _ensure_state_parallelism,
-    )
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("ksl.state.partitions", "7")
     try:
-        spark.conf.set("ksl.state.partitions", "7")
-        _ensure_state_parallelism(spark)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        assert runner._state_partitions(spark) == "7"
+        assert runner._state_partitions(spark, state_partitions=8) == "7"
     finally:
         spark.conf.unset("ksl.state.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_runners_leave_session_conf_unchanged(spark, tmpdir):
+    """ADVICE r15: the runners scope their shuffle-partition and Arrow
+    overrides to one query. The session conf is identical before and
+    after each run, so a streaming row cannot leak its state sizing into
+    the rows that run after it."""
+    base = ts("2024-01-01T00:00:00")
+    stage_explicit_chunks(spark, [[("a", 1, 10.0, base)]], EVENTS_SCHEMA, tmpdir)
+    counted = windows.streaming_count_by_key(
+        replay_stream(spark, tmpdir, EVENTS_SCHEMA), "key"
+    )
+    before = dict(spark.conf.getAll)
+    runner.run_to_memory(
+        counted, "conf_scope_out", "update", state_partitions=8,
+        arrow_batch_rows=123,
+    )
+    assert dict(spark.conf.getAll) == before
+    # the engine-level pin makes run_collect_batches override too
+    spark.conf.set("ksl.state.partitions", "6")
+    try:
+        before = dict(spark.conf.getAll)
+        assert runner.run_collect_batches(counted, "update")
+        assert dict(spark.conf.getAll) == before
+    finally:
+        spark.conf.unset("ksl.state.partitions")
 
 
 def test_hopping_append_and_late_drop(spark, tmpdir):
@@ -835,34 +837,6 @@ def test_checkpoint_recovery_quantile_state(spark, tmpdir):
         "a": (4, 10.0, 40.0, 25.0),
         "b": (1, 5.0, 5.0, 5.0),
     }
-
-
-def test_fraud_alerts_tws_capability_probe(spark, tmpdir):
-    """§7.5: the `transformWithStateInPandas` successor arm, gated on a
-    runtime capability probe (the same pattern as the Kafka broker gate).
-    With protobuf on the Python workers the arm must run end-to-end and
-    emit exactly what the shipped `applyInPandasWithState` arm emits;
-    without it (this sandbox has no protobuf and installs are
-    unavailable), the documented hard gate must fire loudly at
-    construction — never silently degrade to the other arm."""
-    base = ts("2024-01-01T00:00:00")
-    mk = lambda i, amt: ("c1", i, amt, base + dt.timedelta(minutes=i))
-    chunks = [
-        [mk(1, 600.0), mk(2, 700.0)],
-        [mk(3, 100.0), mk(4, 800.0)],
-        [mk(5, 900.0), mk(6, 950.0)],
-    ]
-    stage_explicit_chunks(spark, chunks, EVENTS_SCHEMA, tmpdir)
-    stream = replay_stream(spark, tmpdir, EVENTS_SCHEMA)
-    if not stateful._has_protobuf():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stateful.fraud_alert_stream_tws(stream, "key", threshold=500.0)
-        return
-    alerts = stateful.fraud_alert_stream_tws(stream, "key", threshold=500.0)
-    batches = runner.run_collect_batches(alerts, "append")
-    flat = [(r.record_id, r.running_cnt) for b in batches for r in b]
-    assert flat == [(5, 4), (6, 5)]
-    assert all("High-value order streak" in r.alert for b in batches for r in b)
 
 
 def test_ordered_asof_checkpoint_recovery(spark, tmpdir):
@@ -1279,55 +1253,6 @@ def test_dedup_state_kill_and_resume_matches_uninterrupted(spark, tmpdir):
         keepers = {r[1]: r[2] for r in resumed}  # keep_id -> count
         assert keepers[0] == 3, keepers  # docs 0, 3 (pre) + 20 (post)
         assert keepers[1] == 2, keepers  # doc 1 (pre) + 21 (post)
-
-
-def test_fraud_alert_auto_dispatch_picks_tws_when_protobuf_present(
-    spark, tmpdir, monkeypatch
-):
-    """VERDICT r10 item 8: `fraud_alert_stream(impl="auto")` must select
-    the Spark-4 `transformWithStateInPandas` arm the moment the
-    environment gains protobuf, and the battle-tested
-    `applyInPandasWithState` arm otherwise — with no silent third
-    behavior and loud rejection of unknown impl values."""
-    base = ts("2024-01-01T00:00:00")
-    stage_explicit_chunks(
-        spark, [[("c1", 1, 600.0, base)]], EVENTS_SCHEMA, tmpdir
-    )
-    stream = replay_stream(spark, tmpdir, EVENTS_SCHEMA)
-
-    with pytest.raises(ValueError, match="impl"):
-        stateful.fraud_alert_stream(stream, "key", 500.0, impl="rocksdb")
-
-    # plan-shape probe: which stateful operator did dispatch choose?
-    def node(df):
-        plan = df._jdf.queryExecution().analyzed().toString()
-        assert ("transformWithStateInPandas" in plan) or (
-            "applyInPandasWithState" in plan or "FlatMapGroupsInPandasWithState" in plan
-        ), plan
-        return "tws" if "transformWithStateInPandas" in plan else "apply"
-
-    forced_apply = stateful.fraud_alert_stream(stream, "key", 500.0, impl="apply")
-    assert node(forced_apply) == "apply"
-
-    if stateful._has_protobuf():
-        # real-protobuf environment: auto must pick tws end-to-end
-        assert node(stateful.fraud_alert_stream(stream, "key", 500.0)) == "tws"
-    else:
-        # sandbox: auto falls back to apply; forcing tws fails loudly
-        assert node(stateful.fraud_alert_stream(stream, "key", 500.0)) == "apply"
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stateful.fraud_alert_stream(stream, "key", 500.0, impl="tws")
-        # simulate protobuf appearing: auto must route to the tws arm
-        # (the arm's own gate re-fires because protobuf is truly absent —
-        # proving dispatch reached it, not the apply fallback)
-        monkeypatch.setattr(stateful, "_has_protobuf", lambda: True)
-
-        def tws_marker(*a, **k):
-            raise RuntimeError("tws-arm-reached")
-
-        monkeypatch.setattr(stateful, "fraud_alert_stream_tws", tws_marker)
-        with pytest.raises(RuntimeError, match="tws-arm-reached"):
-            stateful.fraud_alert_stream(stream, "key", 500.0)
 
 
 def test_pin_shard_count_fails_fast_on_mismatch(tmpdir):
