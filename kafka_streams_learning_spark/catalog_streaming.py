@@ -35,15 +35,9 @@ from kafka_streams_learning_spark.sources.replay import (
 from kafka_streams_learning_spark.streaming import runner, stateful, windows
 
 REPLAY_CHUNKS = 2
-# State-store shards for the catalog's streaming queries. Every shard is a
-# live RocksDB instance paying an open+commit per micro-batch, so shard
-# count is sized to STATE VOLUME (~10-100 MB per shard is the sweet spot),
-# not to cores: the fixture state at sf<=0.1 is tens of MB, so 8 shards —
-# measured 1.7x faster than the 32-shard default on the interval join with
-# identical results. A 100 TB deployment raises spark.sql.shuffle.partitions
-# (or pins ksl.state.partitions) at session build; that always wins
-# (streaming/runner._state_partitions).
-STATE_SHARDS = 8
+# The floor every streaming row's state partitions derive from; the runner
+# owns the decision (streaming/runner._state_partitions).
+STATE_SHARDS = runner.STATE_SHARDS
 ALERT_VALUE_THRESHOLD = 100.0  # events.value gate for s03 (~20% qualify)
 ALERT_AFTER = 3
 
@@ -128,12 +122,6 @@ def _interval_join_state_bytes(sf: str) -> int:
     return _IJ_STATE_BYTES[sf]
 
 
-def _interval_join_shards(sf: str) -> int:
-    return runner.derive_state_shards(
-        _interval_join_state_bytes(sf), floor=STATE_SHARDS
-    )
-
-
 # s01 — running count per key, streamed (A1 via the streaming engine)
 
 
@@ -141,7 +129,7 @@ def _s01(spark: SparkSession, sf: str) -> DataFrame:
     stream = shared_replay_table(spark, sf, "events", REPLAY_CHUNKS)
     counted = windows.streaming_count_by_key(stream, "user_id", count_name="cnt")
     name = _fresh_name("s01_out")
-    runner.run_to_memory(counted, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(counted, name, "complete")
     return spark.table(name)
 
 
@@ -154,7 +142,7 @@ def _s02(spark: SparkSession, sf: str) -> DataFrame:
     stream = shared_replay_table(spark, sf, "events", REPLAY_CHUNKS)
     counted = windows.streaming_tumbling_count(stream, "ts", "1 day", "user_id")
     name = _fresh_name("s02_out")
-    runner.run_to_memory(counted, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(counted, name, "complete")
     return spark.table(name)
 
 
@@ -179,7 +167,7 @@ def _s03(spark: SparkSession, sf: str) -> DataFrame:
         stream, "key", ALERT_VALUE_THRESHOLD, ALERT_AFTER
     )
     name = _fresh_name("s03_out")
-    runner.run_to_memory(alerts, name, "append", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(alerts, name, "append")
     return spark.table(name).select("key", "record_id", "amount", "running_cnt")
 
 
@@ -202,7 +190,8 @@ WHERE running_cnt > {ALERT_AFTER}
 # purged as the streams advance.
 
 # Chunk coalescing for the interval joins (VERDICT r11 item 2): the
-# r12 trigger-count probe (tools/interval_probe.py, BENCH_NOTES) showed
+# r12 trigger-count probe (BENCH_NOTES "Round 12: interval-join
+# trigger-count probe → chunk coalescing") showed
 # s04+s23 at fpt=1 cost 20.97 s vs 15.18 s with all staged chunks in one
 # data micro-batch — a 28% cut that is pure per-micro-batch machinery
 # (trigger scheduling + one RocksDB state commit round per batch), with
@@ -249,7 +238,7 @@ def _s04(spark: SparkSession, sf: str) -> DataFrame:
     )
     name = _fresh_name("s04_out")
     runner.run_to_memory(
-        out, name, "append", state_partitions=_interval_join_shards(sf)
+        out, name, "append", state_bytes=_interval_join_state_bytes(sf)
     )
     return spark.table(name)
 
@@ -344,7 +333,7 @@ def _s05(spark: SparkSession, sf: str) -> DataFrame:
         "c_name", "c_mktsegment", "c_acctbal",
     )
     name = _fresh_name("s05_out")
-    runner.run_to_memory(joined, name, "append", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(joined, name, "append")
     return spark.table(name)
 
 
@@ -368,11 +357,7 @@ def _s06(spark: SparkSession, sf: str) -> DataFrame:
     )
     counted = stateful.sliding_count_stream(stream, SLIDE_LOOKBACK_MICROS)
     name = _fresh_name("s06_out")
-    # arrow_batch_rows: rows are 3-4 narrow columns; big chunks keep the
-    # per-chunk state re-send bounded under hot-key skew (see runner)
-    runner.run_to_memory(counted, name, "append", state_partitions=STATE_SHARDS,
-                         shard_count=stateful.REORDER_SHARDS,
-                         arrow_batch_rows=500_000)
+    runner.run_to_memory(counted, name, "append")
     return spark.table(name)
 
 
@@ -453,7 +438,7 @@ def _s07(spark: SparkSession, sf: str) -> DataFrame:
     stream = replay_stream(spark, staging, schema)
     counted = windows.streaming_session_count(stream, "ts", SESSION_GAP_S07, "user_id")
     name = _fresh_name("s07_out")
-    runner.run_to_memory(counted, name, "append", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(counted, name, "append")
     return spark.table(name).filter(F.col("user_id") >= 0)
 
 
@@ -503,7 +488,7 @@ def _s08(spark: SparkSession, sf: str) -> DataFrame:
     )
     groups = s08_dedup_groups(stream)
     name = _fresh_name("s08_out")
-    runner.run_to_memory(groups, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(groups, name, "complete")
     return spark.table(name)
 
 
@@ -529,11 +514,7 @@ def _s09(spark: SparkSession, sf: str) -> DataFrame:
         stream.select("event_id", "user_id", "ts", "event_type")
     )
     name = _fresh_name("s09_out")
-    # arrow_batch_rows: rows are 3-4 narrow columns; big chunks keep the
-    # per-chunk state re-send bounded under hot-key skew (see runner)
-    runner.run_to_memory(enriched, name, "append", state_partitions=STATE_SHARDS,
-                         shard_count=stateful.REORDER_SHARDS,
-                         arrow_batch_rows=500_000)
+    runner.run_to_memory(enriched, name, "append")
     return spark.table(name)
 
 
@@ -554,7 +535,7 @@ def _s10(spark: SparkSession, sf: str) -> DataFrame:
         stream, "ts", "2 days", "1 day", "user_id"
     )
     name = _fresh_name("s10_out")
-    runner.run_to_memory(counted, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(counted, name, "complete")
     return spark.table(name)
 
 
@@ -587,7 +568,7 @@ def _s11(spark: SparkSession, sf: str) -> DataFrame:
         stream, "o_totalprice", QUANTILES, "o_orderpriority"
     )
     name = _fresh_name("s11_out")
-    runner.run_to_memory(stats, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(stats, name, "complete")
     return spark.table(name)
 
 
@@ -618,7 +599,7 @@ def _s13(spark: SparkSession, sf: str) -> DataFrame:
     )
     counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     name = _fresh_name("s13_out")
-    runner.run_to_memory(counts, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(counts, name, "complete")
     return (
         spark.table(name)
         .orderBy(F.col("cnt").desc(), F.col("token"))
@@ -647,7 +628,7 @@ def _s14(spark: SparkSession, sf: str) -> DataFrame:
         F.upper(F.col("event_type")).alias("event_type_upper"),
     )
     name = _fresh_name("s14_out")
-    runner.run_to_memory(mapped, name, "append", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(mapped, name, "append")
     return spark.table(name)
 
 
@@ -725,11 +706,7 @@ def _s12(spark: SparkSession, sf: str) -> DataFrame:
     )
     enriched = ordered_asof_join_stream(stream, disorder="13 hours")
     name = _fresh_name("s12_out")
-    # arrow_batch_rows: rows are 3-4 narrow columns; big chunks keep the
-    # per-chunk state re-send bounded under hot-key skew (see runner)
-    runner.run_to_memory(enriched, name, "append", state_partitions=STATE_SHARDS,
-                         shard_count=stateful.REORDER_SHARDS,
-                         arrow_batch_rows=500_000)
+    runner.run_to_memory(enriched, name, "append")
     return spark.table(name)
 
 
@@ -775,7 +752,7 @@ def _s15(spark: SparkSession, sf: str) -> DataFrame:
     )
     groups = s15_neardup_groups(stream)
     name = _fresh_name("s15_out")
-    runner.run_to_memory(groups, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(groups, name, "complete")
     return spark.table(name)
 
 
@@ -845,7 +822,7 @@ def _s16(spark: SparkSession, sf: str) -> DataFrame:
     # stream's final state hash-equal to x43's oracle
     scored = score_tokens(tok, vocab_q, F.lit(unk))
     name = _fresh_name("s16_out")
-    runner.run_to_memory(scored, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(scored, name, "complete")
     return spark.table(name)
 
 
@@ -880,7 +857,7 @@ def _s17(spark: SparkSession, sf: str) -> DataFrame:
     )
     regs = hll_registers(tok, "token", ["source"])
     name = _fresh_name("s17_out")
-    runner.run_to_memory(regs, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(regs, name, "complete")
     return hll_estimate(spark.table(name), ["source"])
 
 
@@ -919,7 +896,7 @@ def _s18(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     name = _fresh_name("s18_out")
-    runner.run_to_memory(counters, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(counters, name, "complete")
 
     # the query set (exact top-k with counts) comes from the BATCH table —
     # the x58 calibration contract; estimates probe the final stream state
@@ -991,7 +968,7 @@ def _s19(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     name = _fresh_name("s19_out")
-    runner.run_to_memory(hist, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(hist, name, "complete")
 
     # collapse the FINAL counter state exactly as x60 does (shared code)
     from kafka_streams_learning_spark.operators.sketches import (
@@ -1080,11 +1057,7 @@ def _s20(spark: SparkSession, sf: str) -> DataFrame:
         stream, SLIDE_LOOKBACK_MICROS, disorder="13 hours"
     )
     name = _fresh_name("s20_out")
-    # arrow_batch_rows: rows are 3-4 narrow columns; big chunks keep the
-    # per-chunk state re-send bounded under hot-key skew (see runner)
-    runner.run_to_memory(counted, name, "append", state_partitions=STATE_SHARDS,
-                         shard_count=stateful.REORDER_SHARDS,
-                         arrow_batch_rows=500_000)
+    runner.run_to_memory(counted, name, "append")
     return spark.table(name)
 
 
@@ -1150,7 +1123,7 @@ def _s21(spark: SparkSession, sf: str) -> DataFrame:
     # shared _x59_sql oracle
     out = bloom_probe_score(posts, bench, words, id_col="doc_id")
     name = _fresh_name("s21_out")
-    runner.run_to_memory(out, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(out, name, "complete")
     return spark.table(name)
 
 
@@ -1200,7 +1173,7 @@ def _s22(spark: SparkSession, sf: str) -> DataFrame:
     tok = nb_bucketize(stream, [F.col("doc_id")], CLS_BUCKETS)
     scored = nb_score(tok, weights, F.lit(w0), F.lit(prior), "doc_id")
     name = _fresh_name("s22_out")
-    runner.run_to_memory(scored, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(scored, name, "complete")
     return spark.table(name)
 
 
@@ -1301,7 +1274,7 @@ def _s23(spark: SparkSession, sf: str) -> DataFrame:
     )
     name = _fresh_name("s23_out")
     runner.run_to_memory(
-        out, name, "append", state_partitions=_interval_join_shards(sf)
+        out, name, "append", state_bytes=_interval_join_state_bytes(sf)
     )
     return spark.table(name).filter(F.col("o_orderkey") >= 0)
 
@@ -1347,7 +1320,7 @@ def _s24(spark: SparkSession, sf: str) -> DataFrame:
     )
     rolled = star_rollup(stream, *star_rollup_dims(spark, sf))
     name = _fresh_name("s24_out")
-    runner.run_to_memory(rolled, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(rolled, name, "complete")
     return spark.table(name)
 
 

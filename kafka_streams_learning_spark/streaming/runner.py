@@ -8,6 +8,14 @@
 - run_collect_batches — foreachBatch capture of each micro-batch's rows:
   the observable emission sequence (KTable changelog semantics,
   `StreamsOrderCount.java:130-134`).
+
+Both start through `_run`, the one owner of stateful-stream sizing. It
+fixes the query's `spark.sql.shuffle.partitions` — the state-store
+partition count, frozen at the first checkpoint — from the
+`ksl.state.partitions` pin when a deployment sets one, else from
+`derive_state_shards(state_bytes)`. It takes the shard-count pin and the
+Arrow chunk size from the shard-keyed operator's own tag
+(`stateful._shard_keyed`). Every override is scoped to the one query.
 """
 
 from __future__ import annotations
@@ -18,8 +26,13 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
-_SPARK_DEFAULT_SHUFFLE_PARTITIONS = "200"
 _ARROW_BATCH_ROWS = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+# Floor of the state-shard derivation. AQE does not coalesce stateful
+# shuffles, so this is the live state-store count: the catalog's fixture
+# state at sf<=0.1 is tens of MB, where 8 shards measured 1.7x faster than
+# 32 on the interval join with identical results.
+STATE_SHARDS = 8
 
 # Shard-count derivation target (VERDICT r14 item 4): shard count is a
 # state-SIZE decision — every shard is a live RocksDB instance paying an
@@ -31,23 +44,20 @@ _ARROW_BATCH_ROWS = "spark.sql.execution.arrow.maxRecordsPerBatch"
 # 8 shards 48-53 s, 16 → 26.6-27.9, 32 → 18.9-22.8 — still improving at
 # ~70 MB/shard, so the target sits at 40 MB, deriving ~31 shards there;
 # full table in OPTIMIZATION_r15.md "STATE_SHARDS derivation").
-# Deployments can still pin `ksl.state.partitions`, which beats every
-# derivation.
 TARGET_STATE_BYTES_PER_SHARD = 40 << 20
 
 
-def derive_state_shards(
-    state_bytes: int | None, floor: int = 8
-) -> int:
+def derive_state_shards(state_bytes: int | None) -> int:
     """Shard count for an expected state volume: ceil(bytes / target),
-    floored at `floor` (the measured flat-bottom for the catalog's
+    floored at STATE_SHARDS (the measured flat-bottom for the catalog's
     tens-of-MB fixture state — fewer shards choke on write volume, more
     pay per-instance constants). `None`/non-positive estimates (unknown
-    state) keep the floor, so a caller that cannot size its state gets
-    exactly the historical behavior."""
+    state) keep the floor."""
     if not state_bytes or state_bytes <= 0:
-        return floor
-    return max(floor, math.ceil(state_bytes / TARGET_STATE_BYTES_PER_SHARD))
+        return STATE_SHARDS
+    return max(
+        STATE_SHARDS, math.ceil(state_bytes / TARGET_STATE_BYTES_PER_SHARD)
+    )
 
 
 def _checkpoint() -> str:
@@ -76,54 +86,16 @@ def _scoped_conf(spark: SparkSession, overrides: dict[str, str | None]):
 
 
 def _state_partitions(
-    spark: SparkSession, state_partitions: int | None = None
-) -> str | None:
-    """The `spark.sql.shuffle.partitions` a stateful stream should start
-    with, or None to keep the session's value. Sizes stateful-stream
-    parallelism to the cluster, not Spark's static default: the setting
-    fixes the state-store partition count at first checkpoint, and AQE
-    does NOT coalesce stateful streaming shuffles — a vanilla session's
-    200 partitions means 200 state stores per operator (measured 3-4x
-    slower micro-batches on local[32] at sf0.01). Only the untouched
-    default is replaced, so a deliberately tuned session is left alone;
-    on a real cluster defaultParallelism is the executor-core count,
-    which is the right state shard count.
-
-    A session that was EXPLICITLY configured (builder/spark-submit conf)
-    is never overridden, even to exactly 200 — that intent is visible in
-    the SparkContext conf. Caveat: that check only sees confs present when
-    the SparkContext was CREATED; `getOrCreate` layering a builder conf
-    onto a pre-existing context stores it session-side only, where a
-    runtime `spark.conf.set(..., "200")` is indistinguishable from the
-    default. Both are overridden WITH a warning log; to pin a deliberate
-    200 in such a session, set `ksl.state.partitions=200` (checked first,
-    always wins) or any non-200 value via `spark.conf.set`.
-
-    `state_partitions` is the CALLER's sizing (a query that knows its
-    state volume): shard count is a state-size decision as much as a
-    parallelism one — every shard is a live state-store instance (a
-    RocksDB open + commit per micro-batch), so over-sharding small state
-    buys pure fixed cost. Target ~10-100 MB of state per shard, floored
-    at enough shards to spread hot keys. A user pin via
-    `ksl.state.partitions` still beats it."""
+    spark: SparkSession, state_bytes: int | None = None
+) -> str:
+    """The `spark.sql.shuffle.partitions` a stateful stream starts with:
+    the `ksl.state.partitions` pin when set — the one override a
+    deployment can make without editing code — else the count derived
+    from the query's expected state volume."""
     pinned = spark.conf.get("ksl.state.partitions", None)
     if pinned is not None:
-        return pinned  # explicit engine-level opt-out
-    if state_partitions is not None:
-        return str(state_partitions)
-    if spark.sparkContext.getConf().contains(_SHUFFLE_PARTITIONS):
-        return None  # explicitly configured at session build — respect it
-    if spark.conf.get(_SHUFFLE_PARTITIONS) != _SPARK_DEFAULT_SHUFFLE_PARTITIONS:
-        return None
-    target = str(spark.sparkContext.defaultParallelism)
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "overriding %s=200 (Spark default) with defaultParallelism=%s "
-        "for streaming state sizing; set it in the session builder to "
-        "pin a deliberate value", _SHUFFLE_PARTITIONS, target,
-    )
-    return target
+        return pinned
+    return str(derive_state_shards(state_bytes))
 
 
 def _plan_uses_keyed_state(df: DataFrame) -> bool:
@@ -139,42 +111,23 @@ def _plan_uses_keyed_state(df: DataFrame) -> bool:
     return "WithState" in plan and "_shard" in plan
 
 
-def run_to_memory(
+def _run(
     df: DataFrame,
-    name: str,
-    output_mode: str = "update",
-    checkpoint: str | None = None,
-    state_partitions: int | None = None,
-    shard_count: int | None = None,
-    arrow_batch_rows: int | None = None,
+    sink,
+    checkpoint: str | None,
+    state_bytes: int | None,
 ) -> None:
-    """Run a streaming DataFrame to completion into an in-memory table
-    named `name`; query it afterwards with spark.sql/spark.table.
+    """The one start path: pin the shard count from the operator's tag,
+    scope the state sizing and the tagged Arrow chunk size to this query,
+    start `sink(df.writeStream)` and drive it to completion.
 
-    `shard_count`: the `n_shards` of any shard-keyed stateful operator
-    in `df`'s plan — it is pinned next to the checkpoint via
-    `stateful.pin_shard_count`, so a restart with a different shard
-    count fails fast instead of silently orphaning state. When omitted,
-    the shard-keyed operators' own tag (`stateful._tag_shard_count`) is
-    picked up automatically; a plan that uses keyed state but carries
-    neither (the tag is dropped by any transformation after the
-    operator) gets a logged warning — the restart protection is then on
-    the caller (ADVICE r12).
-
-    `arrow_batch_rows`: per-query override of
-    `spark.sql.execution.arrow.maxRecordsPerBatch` (restored after the
-    run). applyInPandasWithState re-serializes a group's FULL state into
-    every input chunk's state-info row, so a query whose keyed state is
-    large (reorder buffers under a hot key) must keep chunks-per-group
-    LOW: per-batch input bytes ≈ data + state_size * ceil(group_rows /
-    this value), and Spark's single-buffer input writer degrades
-    catastrophically past ~1 GiB (DirectByteBufferOutputStream's
-    doubling overflows Int there and falls back to copy-per-write).
-    Narrow rows (a few int64s) tolerate large values cheaply."""
+    A plan that uses shard-keyed state but carries no tag (any
+    transformation after the operator drops it) gets a logged warning —
+    the restart protection of `pin_shard_count` is then on the caller
+    (ADVICE r12)."""
     spark = df.sparkSession
     ckpt = checkpoint or _checkpoint()
-    if shard_count is None:
-        shard_count = getattr(df, "_ksl_shard_count", None)
+    shard_count = getattr(df, "_ksl_shard_count", None)
     if shard_count is not None:
         from kafka_streams_learning_spark.streaming.stateful import (
             pin_shard_count,
@@ -185,28 +138,41 @@ def run_to_memory(
         import logging
 
         logging.getLogger(__name__).warning(
-            "streaming plan uses keyed state but no shard_count was "
-            "passed or tagged; if a shard-keyed operator is in this "
-            "plan, a restart of checkpoint %s with a different n_shards "
-            "will silently orphan state — pass shard_count=n_shards",
+            "streaming plan uses shard-keyed state but carries no shard "
+            "count tag; a restart of checkpoint %s with a different "
+            "n_shards will silently orphan state — run the operator's "
+            "output directly or call stateful.pin_shard_count",
             ckpt,
         )
+    arrow_rows = getattr(df, "_ksl_arrow_batch_rows", None)
     overrides = {
-        _SHUFFLE_PARTITIONS: _state_partitions(spark, state_partitions),
-        _ARROW_BATCH_ROWS: None if arrow_batch_rows is None
-        else str(arrow_batch_rows),
+        _SHUFFLE_PARTITIONS: _state_partitions(spark, state_bytes),
+        _ARROW_BATCH_ROWS: None if arrow_rows is None else str(arrow_rows),
     }
     with _scoped_conf(spark, overrides):
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+        q = sink(df.writeStream).option("checkpointLocation", ckpt).start()
         q.processAllAvailable()
         q.stop()
         q.awaitTermination()
+
+
+def run_to_memory(
+    df: DataFrame,
+    name: str,
+    output_mode: str = "update",
+    checkpoint: str | None = None,
+    state_bytes: int | None = None,
+) -> None:
+    """Run a streaming DataFrame to completion into an in-memory table
+    named `name`; query it afterwards with spark.sql/spark.table.
+    `state_bytes` is the caller's estimate of the query's state volume
+    (None: unknown), from which `_run` derives the state partitions."""
+    _run(
+        df,
+        lambda w: w.outputMode(output_mode).format("memory").queryName(name),
+        checkpoint,
+        state_bytes,
+    )
 
 
 def run_collect_batches(
@@ -216,21 +182,15 @@ def run_collect_batches(
 ) -> list[list]:
     """Run to completion, capturing each micro-batch's emitted rows in
     order — the update-mode emission sequence as observable behavior."""
-    spark = df.sparkSession
     batches: list[list] = []
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         batches.append(batch_df.collect())
 
-    with _scoped_conf(spark, {_SHUFFLE_PARTITIONS: _state_partitions(spark)}):
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .foreachBatch(_sink)
-            .option("checkpointLocation", checkpoint or _checkpoint())
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
+    _run(
+        df,
+        lambda w: w.outputMode(output_mode).foreachBatch(_sink),
+        checkpoint,
+        None,
+    )
     return batches
-

@@ -20,9 +20,9 @@ Operational contracts (apply to every shard-keyed operator below —
 - **Shard count is part of the checkpoint format.** The state key is
   `hash(user_id) % n_shards`; restarting an existing checkpoint with a
   different `n_shards` re-hashes users onto other shards and silently
-  orphans their state. Use `pin_shard_count(checkpoint_dir, n_shards)`
-  (called automatically by `runner.run_to_memory(shard_count=...)`) to
-  persist the count next to the checkpoint and fail fast on mismatch.
+  orphans their state. `pin_shard_count(checkpoint_dir, n_shards)`
+  persists the count next to the checkpoint and fails fast on mismatch;
+  both runners call it from the operator's output tag (`_shard_keyed`).
 - **Checkpoint format breaks (r11, r12).** The r11 shard re-keying
   changed the grouping key (user_id → _shard) and both state schemas;
   r12 re-typed the shard state columns from array<long>/array<string>
@@ -202,35 +202,63 @@ def fraud_alert_stream(
         F.col(key_col).cast("string").alias("key"),
         "record_id", "amount", "ts",
     )
-    return _tag_shard_count(
-        base.withColumn(
-            "_shard", F.pmod(F.xxhash64("key"), F.lit(n_shards))
-        )
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _sharded_alert_fn(
-                threshold, alert_after, MAX_STATE_BYTES_PER_SHARD
-            ),
-            outputStructType=ALERT_OUTPUT_SCHEMA,
-            stateStructType=_SHARDED_ALERT_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        ),
-        n_shards,
+    return _shard_keyed(
+        base, "key", n_shards,
+        _sharded_alert_fn(threshold, alert_after, MAX_STATE_BYTES_PER_SHARD),
+        ALERT_OUTPUT_SCHEMA, _SHARDED_ALERT_STATE_SCHEMA,
     )
 
 
-def _tag_shard_count(df: DataFrame, n_shards: int) -> DataFrame:
-    """Attach the operator's shard count to the returned DataFrame so
-    `runner.run_to_memory` can pin the checkpoint automatically (ADVICE
-    r12: callers that forgot to thread `shard_count` through silently
-    lost the restart protection the pin exists for). The tag is a plain
-    Python attribute — any further transformation creates a NEW
-    DataFrame object and drops it, which is the safe direction: an
-    untagged stateful plan triggers the runner's warning instead of a
-    possibly-wrong auto-pin."""
-    df._ksl_shard_count = n_shards
-    return df
+# Arrow chunk size the sliding/as-of operators declare: their rows are
+# 3-4 narrow columns, and big chunks keep the per-chunk state re-send
+# (`_check_state_budget`) bounded under hot-key skew.
+_NARROW_ARROW_BATCH_ROWS = 500_000
+
+
+def _shard_keyed(
+    df: DataFrame,
+    key: str,
+    n_shards: int,
+    fn,
+    out_schema: str,
+    state_schema: str,
+    watermark: str | None = None,
+    arrow_batch_rows: int | None = None,
+) -> DataFrame:
+    """Re-key `df` onto `hash(key) % n_shards` and run `fn` per shard with
+    `applyInPandasWithState` in append mode. A `watermark` (a delay on
+    `ts`) turns on EventTimeTimeout, so buffering shards wake as it
+    advances; without one the operator never times out.
+
+    The output is tagged with `n_shards` and `arrow_batch_rows`, which
+    the runners read: they pin the shard count next to the checkpoint
+    (ADVICE r12: callers that forgot to thread it through silently lost
+    the restart protection the pin exists for) and scope
+    `spark.sql.execution.arrow.maxRecordsPerBatch` to the query.
+    applyInPandasWithState re-serializes a group's FULL state into every
+    input chunk's state-info row, so per-batch input bytes ≈ data +
+    state_size * ceil(group_rows / chunk rows), and Spark's single-buffer
+    input writer degrades catastrophically past ~1 GiB
+    (DirectByteBufferOutputStream's doubling overflows Int there); None
+    keeps the session's chunk size. The tags are plain Python attributes
+    — any further transformation creates a NEW DataFrame object and
+    drops them, which is the safe direction: an untagged stateful plan
+    triggers the runner's warning instead of a possibly-wrong pin."""
+    from pyspark.sql import functions as F
+
+    keyed = df.withColumn("_shard", F.pmod(F.xxhash64(key), F.lit(n_shards)))
+    if watermark is not None:
+        keyed = keyed.withWatermark("ts", watermark)
+    out = keyed.groupBy("_shard").applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf="NoTimeout" if watermark is None else "EventTimeTimeout",
+    )
+    out._ksl_shard_count = n_shards
+    out._ksl_arrow_batch_rows = arrow_batch_rows
+    return out
 
 
 def pin_shard_count(checkpoint_dir: str, n_shards: int) -> None:
@@ -311,24 +339,14 @@ def sliding_count_stream(
     docstring / `pin_shard_count`).
 
     Input columns: (user_id, event_id, ts)."""
-    from pyspark.sql import functions as F
-
-    return _tag_shard_count(
-        df.withColumn(
-            "_shard", F.pmod(F.xxhash64("user_id"), F.lit(n_shards))
-        )
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _sliding_shard_fn(lookback_micros, release_all=True,
-                              max_composite=_max_composite,
-                              max_state_bytes=_max_state_bytes
-                              or MAX_STATE_BYTES_PER_SHARD),
-            outputStructType=SLIDING_OUTPUT_SCHEMA,
-            stateStructType=_ORDERED_SLIDING_STATE_SCHEMA_SHARDED,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        ),
-        n_shards,
+    return _shard_keyed(
+        df, "user_id", n_shards,
+        _sliding_shard_fn(lookback_micros, release_all=True,
+                          max_composite=_max_composite,
+                          max_state_bytes=_max_state_bytes
+                          or MAX_STATE_BYTES_PER_SHARD),
+        SLIDING_OUTPUT_SCHEMA, _ORDERED_SLIDING_STATE_SCHEMA_SHARDED,
+        arrow_batch_rows=_NARROW_ARROW_BATCH_ROWS,
     )
 
 
@@ -373,24 +391,14 @@ def asof_join_stream(
     docstring / `pin_shard_count`).
 
     Input columns: (event_id, user_id, ts, event_type)."""
-    from pyspark.sql import functions as F
-
-    return _tag_shard_count(
-        df.withColumn(
-            "_shard", F.pmod(F.xxhash64("user_id"), F.lit(n_shards))
-        )
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _asof_shard_fn(match_type, release_all=True,
-                           max_composite=_max_composite,
-                           max_state_bytes=_max_state_bytes
-                           or MAX_STATE_BYTES_PER_SHARD),
-            outputStructType=ASOF_OUTPUT_SCHEMA,
-            stateStructType=_ORDERED_ASOF_STATE_SCHEMA_SHARDED,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        ),
-        n_shards,
+    return _shard_keyed(
+        df, "user_id", n_shards,
+        _asof_shard_fn(match_type, release_all=True,
+                       max_composite=_max_composite,
+                       max_state_bytes=_max_state_bytes
+                       or MAX_STATE_BYTES_PER_SHARD),
+        ASOF_OUTPUT_SCHEMA, _ORDERED_ASOF_STATE_SCHEMA_SHARDED,
+        arrow_batch_rows=_NARROW_ARROW_BATCH_ROWS,
     )
 
 
@@ -534,7 +542,8 @@ def _check_state_budget(blobs, max_state_bytes: int) -> None:
             "state transport re-sends the full state per input chunk "
             "and livelocks past ~1 GiB of buffered input. Reduce rows "
             "per micro-batch (trigger cadence), raise n_shards, or "
-            "raise arrow_batch_rows so chunks-per-group stays small."
+            "raise the operator's Arrow chunk size (spark.sql.execution."
+            "arrow.maxRecordsPerBatch) so chunks-per-group stays small."
         )
 
 
@@ -746,24 +755,13 @@ def ordered_sliding_count_stream(
     docstring / `pin_shard_count`).
 
     Input columns: (user_id, event_id, ts)."""
-    from pyspark.sql import functions as F
-
-    return _tag_shard_count(
-        df.withColumn(
-            "_shard", F.pmod(F.xxhash64("user_id"), F.lit(n_shards))
-        )
-        .withWatermark("ts", disorder)
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _sliding_shard_fn(lookback_micros, max_composite=_max_composite,
-                              max_state_bytes=_max_state_bytes
-                              or MAX_STATE_BYTES_PER_SHARD),
-            outputStructType=SLIDING_OUTPUT_SCHEMA,
-            stateStructType=_ORDERED_SLIDING_STATE_SCHEMA_SHARDED,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        ),
-        n_shards,
+    return _shard_keyed(
+        df, "user_id", n_shards,
+        _sliding_shard_fn(lookback_micros, max_composite=_max_composite,
+                          max_state_bytes=_max_state_bytes
+                          or MAX_STATE_BYTES_PER_SHARD),
+        SLIDING_OUTPUT_SCHEMA, _ORDERED_SLIDING_STATE_SCHEMA_SHARDED,
+        watermark=disorder, arrow_batch_rows=_NARROW_ARROW_BATCH_ROWS,
     )
 
 
@@ -966,22 +964,11 @@ def ordered_asof_join_stream(
     docstring / `pin_shard_count`).
 
     Input columns: (event_id, user_id, ts, event_type)."""
-    from pyspark.sql import functions as F
-
-    return _tag_shard_count(
-        df.withColumn(
-            "_shard", F.pmod(F.xxhash64("user_id"), F.lit(n_shards))
-        )
-        .withWatermark("ts", disorder)
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _asof_shard_fn(match_type, max_composite=_max_composite,
-                           max_state_bytes=_max_state_bytes
-                           or MAX_STATE_BYTES_PER_SHARD),
-            outputStructType=ASOF_OUTPUT_SCHEMA,
-            stateStructType=_ORDERED_ASOF_STATE_SCHEMA_SHARDED,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        ),
-        n_shards,
+    return _shard_keyed(
+        df, "user_id", n_shards,
+        _asof_shard_fn(match_type, max_composite=_max_composite,
+                       max_state_bytes=_max_state_bytes
+                       or MAX_STATE_BYTES_PER_SHARD),
+        ASOF_OUTPUT_SCHEMA, _ORDERED_ASOF_STATE_SCHEMA_SHARDED,
+        watermark=disorder, arrow_batch_rows=_NARROW_ARROW_BATCH_ROWS,
     )

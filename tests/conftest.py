@@ -23,6 +23,31 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def started_confs(monkeypatch):
+    """Record, for every streaming query the runners start, the
+    (shuffle partitions, Arrow chunk rows) the session holds inside the
+    runner's conf scope — the values the query starts with."""
+    from contextlib import contextmanager
+
+    from kafka_streams_learning_spark.streaming import runner
+
+    seen: list[tuple[str | None, str | None]] = []
+    scoped = runner._scoped_conf
+
+    @contextmanager
+    def spy(spark, overrides):
+        with scoped(spark, overrides):
+            seen.append(tuple(
+                spark.conf.get(k, None)
+                for k in (runner._SHUFFLE_PARTITIONS, runner._ARROW_BATCH_ROWS)
+            ))
+            yield
+
+    monkeypatch.setattr(runner, "_scoped_conf", spy)
+    return seen
+
+
 def py_nb_model(rows, d):
     """Plain-Python hashed-NB reference model — the single mirror of
     `textops.nb_train`/`nb_score` shared by the unit test and the

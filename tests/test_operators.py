@@ -1144,13 +1144,16 @@ def test_bench_line_stays_under_driver_capture():
     assert len(line) < 1800, len(line)
 
 
-def test_bench_line_never_drops_query_rows():
+def test_bench_line_never_drops_query_rows(capsys):
     """VERDICT r14 item 1: a hot window made dozens of rows diverge from
     the paired medians, the unbounded stamp bloated the printed line past
     the guard, and the old slowest-40 fallback silently discarded 69 of
     109 per-query timings. Pin the fix: with every catalog row present
-    and a 30-entry divergence stamp, the printed line stays under the
-    driver's capture AND still carries every query row."""
+    and a 30-entry divergence stamp, the printed line still carries every
+    query row and the full divergent count. Three inputs: the stamp fits
+    once capped; the row set leaves no room for the stamp, so it is
+    dropped but its count stays; the rows alone overflow the guard, so
+    the line prints whole with a warning on stderr."""
     import json
 
     from bench import MAX_LINE_CHARS, STAMP_CAP, format_bench_line
@@ -1161,23 +1164,29 @@ def test_bench_line_never_drops_query_rows():
     assert len(short) == len(names), "short bench keys collided"
     # 30 divergent rows, the r14 hot-window shape that broke the old line
     stamp = {k: 999.99 for k in list(short)[:30]}
-    line = format_bench_line(
-        short,
-        stamp,
-        value=999999.999,
-        setup=99999.999,
-        all_in_wall=999999.999,
-        sf=0.1,
-    )
-    assert len(line) <= MAX_LINE_CHARS, len(line)
-    parsed = json.loads(line)
-    assert set(parsed["queries"]) == set(short)  # zero rows dropped
-    assert "truncated_to_slowest" not in parsed
-    div = parsed.get("paired_median_divergent", {})
-    assert len(div) <= STAMP_CAP
-    if div:
-        # the capped stamp advertises the full divergent count
-        assert parsed.get("paired_divergent_n", len(div)) == 30
+    kw = dict(value=999999.999, setup=99999.999, all_in_wall=999999.999, sf=0.1)
+    # room left on a stamp-free line that still carries the count; each
+    # pad row takes len('"p000":9999.99,') = 15 chars of it
+    slack = (MAX_LINE_CHARS - len(format_bench_line(short, {}, **kw))
+             - len('"paired_divergent_n":30,'))
+    for pad, stamp_kept, fits in (
+        (0, True, True),
+        (slack // 15, False, True),
+        (slack // 15 + 10, False, False),
+    ):
+        rows = dict(short, **{f"p{i:03d}": 9999.99 for i in range(pad)})
+        line = format_bench_line(rows, stamp, **kw)
+        err = capsys.readouterr().err
+        assert (len(line) <= MAX_LINE_CHARS) == fits, (pad, len(line))
+        assert ("MAX_LINE_CHARS" in err) == (not fits), (pad, err)
+        parsed = json.loads(line)
+        assert set(parsed["queries"]) == set(rows)  # zero rows dropped
+        assert "truncated_to_slowest" not in parsed
+        div = parsed.get("paired_median_divergent", {})
+        assert bool(div) == stamp_kept, pad
+        assert len(div) <= STAMP_CAP
+        # the capped or dropped stamp advertises the full divergent count
+        assert parsed["paired_divergent_n"] == 30, pad
 
 
 def test_never_gated_queries_sit_inside_gate_prefix():

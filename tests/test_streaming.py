@@ -632,10 +632,9 @@ def test_sharded_fraud_checkpoint_recovery(spark, tmpdir):
         threshold=500.0, n_shards=2,
     )
     # the memory sink can't recover a checkpoint — use the foreachBatch
-    # runner and pin manually, as a direct writeStream user would
+    # runner, which pins the tagged shard count like run_to_memory
     run1 = runner.run_collect_batches(alerts, "append", checkpoint=ckpt)
     assert [r for b in run1 for r in b] == []
-    stateful.pin_shard_count(ckpt, 2)
 
     # the query dies; more records arrive (a low-value, then one for a
     # and two for b)
@@ -697,16 +696,24 @@ def test_interactive_state_store_fetch(spark, tmpdir):
     assert got == [(base, 2), (base + dt.timedelta(minutes=1), 1)]
 
 
-def test_state_partitions_opt_out_conf_pins_value(spark):
-    """`ksl.state.partitions` is the engine-level escape hatch for the one
-    case the builder-conf check cannot see (a deliberate 200 set on a
-    reused context): it is consulted first and always wins."""
+def test_state_partitions_opt_out_conf_pins_value(spark, tmpdir, started_confs):
+    """`ksl.state.partitions` is the one sizing override a deployment can
+    set without editing code: in both runners it beats the count derived
+    from the query's state estimate."""
+    base = ts("2024-01-01T00:00:00")
+    stage_explicit_chunks(spark, [[("a", 1, 10.0, base)]], EVENTS_SCHEMA, tmpdir)
+    counted = windows.streaming_count_by_key(
+        replay_stream(spark, tmpdir, EVENTS_SCHEMA), "key"
+    )
+    big = 20 * runner.TARGET_STATE_BYTES_PER_SHARD
+    runner.run_to_memory(counted, "pin_derived_out", "update", state_bytes=big)
     spark.conf.set("ksl.state.partitions", "7")
     try:
-        assert runner._state_partitions(spark) == "7"
-        assert runner._state_partitions(spark, state_partitions=8) == "7"
+        runner.run_to_memory(counted, "pin_out", "update", state_bytes=big)
+        assert runner.run_collect_batches(counted, "update")
     finally:
         spark.conf.unset("ksl.state.partitions")
+    assert [p for p, _ in started_confs] == ["20", "7", "7"]
 
 
 def test_runners_leave_session_conf_unchanged(spark, tmpdir):
@@ -721,8 +728,8 @@ def test_runners_leave_session_conf_unchanged(spark, tmpdir):
     )
     before = dict(spark.conf.getAll)
     runner.run_to_memory(
-        counted, "conf_scope_out", "update", state_partitions=8,
-        arrow_batch_rows=123,
+        counted, "conf_scope_out", "update",
+        state_bytes=8 * runner.TARGET_STATE_BYTES_PER_SHARD,
     )
     assert dict(spark.conf.getAll) == before
     # the engine-level pin makes run_collect_batches override too
@@ -964,7 +971,7 @@ def test_streaming_neardup_merges_across_batches(spark, tmpdir):
         .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_members"))
     )
     name = "s15_test_out"
-    runner.run_to_memory(groups, name, "complete", state_partitions=2)
+    runner.run_to_memory(groups, name, "complete")
     rows = sorted(spark.table(name).collect(), key=lambda r: r["keep_id"])
     assert [(r["keep_id"], r["n_members"]) for r in rows] == [(1, 2), (2, 1)]
 
@@ -1080,7 +1087,7 @@ def test_streaming_star_rollup_aggregates_across_batches(spark, tmpdir):
     rolled = star_rollup(
         replay_stream(spark, tmpdir, li_schema), sup, nat, reg, prt
     )
-    runner.run_to_memory(rolled, "s24_test_out", "complete", state_partitions=2)
+    runner.run_to_memory(rolled, "s24_test_out", "complete")
     got = {
         (r.region, r.nation, r.brand): (r.n_items, r.sum_qty, r.revenue_cents)
         for r in spark.table("s24_test_out").collect()
@@ -1295,8 +1302,7 @@ def test_state_budget_guard_fails_loudly(spark, tmpdir):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     with pytest.raises(Exception, match="per-shard budget") as ei:
-        runner.run_to_memory(out, "budget_guard_out", "append",
-                             state_partitions=4)
+        runner.run_to_memory(out, "budget_guard_out", "append")
     assert isinstance(ei.value, StreamingQueryException) or "budget" in str(
         ei.value
     )
@@ -1323,7 +1329,7 @@ def test_state_budget_boundary_under_budget_completes(spark, tmpdir):
             60 * 60 * 1_000_000,
             _max_state_bytes=budget,
         )
-        runner.run_to_memory(out, name, "append", state_partitions=4)
+        runner.run_to_memory(out, name, "append")
         return spark.table(name)
 
     got = run(exact_state_bytes, "budget_at_bound")
@@ -1334,9 +1340,9 @@ def test_state_budget_boundary_under_budget_completes(spark, tmpdir):
 
 def test_shard_count_tag_auto_pins_checkpoint(spark, tmpdir):
     """The shard-keyed operators tag their output with n_shards and
-    run_to_memory pins the checkpoint from the tag when the caller
-    doesn't pass shard_count (ADVICE r12) — a restart with a different
-    count then fails fast even for callers that forgot to thread it."""
+    run_to_memory pins the checkpoint from the tag (ADVICE r12) — a
+    restart with a different count then fails fast without the caller
+    threading the count through."""
     import json
     import os
 
@@ -1351,20 +1357,21 @@ def test_shard_count_tag_auto_pins_checkpoint(spark, tmpdir):
     )
     assert out._ksl_shard_count == 6
     ckpt = f"{tmpdir}/ckpt"
-    runner.run_to_memory(out, "tag_pin_out", "append",
-                         checkpoint=ckpt, state_partitions=4)
+    runner.run_to_memory(out, "tag_pin_out", "append", checkpoint=ckpt)
     with open(os.path.join(ckpt, "ksl-shard-count.json")) as fh:
         assert json.load(fh)["n_shards"] == 6
     with pytest.raises(ValueError, match="n_shards=6"):
         stateful.pin_shard_count(ckpt, 12)
 
 
-def test_arrow_batch_override_unsets_when_previously_unset(spark, tmpdir):
-    """run_to_memory's per-query arrow.maxRecordsPerBatch override must
-    not leak session-wide when the session never set the key (ADVICE
-    r12): after the run the key is unset again, not pinned to the
-    override."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+def test_arrow_batch_override_unsets_when_previously_unset(
+    spark, tmpdir, started_confs
+):
+    """The per-query arrow.maxRecordsPerBatch override a tagged sliding
+    operator declares must not leak session-wide when the session never
+    set the key (ADVICE r12): after the run the key is unset again, not
+    pinned to the override."""
+    key = runner._ARROW_BATCH_ROWS
     prior = spark.conf.get(key, None)
     spark.conf.unset(key)
     try:
@@ -1372,14 +1379,21 @@ def test_arrow_batch_override_unsets_when_previously_unset(spark, tmpdir):
         rows = [[("a", 1, 10.0, base)]]
         stage_explicit_chunks(spark, rows, EVENTS_SCHEMA, f"{tmpdir}/a")
         stream = replay_stream(spark, f"{tmpdir}/a", EVENTS_SCHEMA)
-        runner.run_to_memory(
-            stream.groupBy("key").count(), "arrow_unset_out", "complete",
-            arrow_batch_rows=12345,
+        sliding = stateful.sliding_count_stream(
+            stream.select(
+                F.hash("key").cast("long").alias("user_id"),
+                F.col("record_id").alias("event_id"), "ts",
+            ),
+            60 * 1_000_000,
         )
+        runner.run_to_memory(sliding, "arrow_unset_out", "append")
         assert spark.conf.get(key, None) is None
     finally:
         if prior is not None:
             spark.conf.set(key, prior)
+    assert started_confs == [
+        (str(runner.STATE_SHARDS), str(stateful._NARROW_ARROW_BATCH_ROWS))
+    ]
 
 
 def test_all_staged_one_batch_derives_file_count(spark, tmpdir):
@@ -1469,8 +1483,8 @@ def test_interval_join_coalescing_invariance(spark, tmpdir, seed):
 
 def test_derive_state_shards_formula():
     """VERDICT r14 item 4: shard count is a state-SIZE decision. The
-    derivation is ceil(state_bytes / target) floored at the caller's
-    measured flat-bottom; unknown state keeps the floor exactly."""
+    derivation is ceil(state_bytes / target) floored at the measured
+    flat-bottom STATE_SHARDS; unknown state keeps the floor exactly."""
     from kafka_streams_learning_spark.streaming.runner import (
         TARGET_STATE_BYTES_PER_SHARD as T,
         derive_state_shards,
@@ -1482,7 +1496,6 @@ def test_derive_state_shards_formula():
     assert derive_state_shards(8 * T) == 8
     assert derive_state_shards(8 * T + 1) == 9
     assert derive_state_shards(12 * T) == 12
-    assert derive_state_shards(3 * T, floor=4) == 4
 
 
 def test_interval_join_shards_stay_floored_at_gate_scales():
@@ -1493,8 +1506,9 @@ def test_interval_join_shards_stay_floored_at_gate_scales():
     (sf1 probe, OPTIMIZATION_r15.md)."""
     from kafka_streams_learning_spark.catalog_streaming import (
         STATE_SHARDS,
-        _interval_join_shards,
+        _interval_join_state_bytes,
     )
 
     for sf in ("sf0.001", "sf0.01", "sf0.1"):
-        assert _interval_join_shards(f"/root/testdata/{sf}") == STATE_SHARDS
+        state_bytes = _interval_join_state_bytes(f"/root/testdata/{sf}")
+        assert runner.derive_state_shards(state_bytes) == STATE_SHARDS

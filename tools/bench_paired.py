@@ -139,10 +139,12 @@ def _stream_canary(spark, staging_dir: str) -> float:
         counted = streaming_count_by_key(
             replay_stream(spark, staging_dir, _STREAM_CANARY_SCHEMA), "key"
         )
-        # 4 state partitions: enough to exercise the RocksDB open/commit
-        # machinery per batch without the 32-task scheduling noise that
-        # made the canary's own variance rival the signal
-        runner.run_to_memory(counted, name, "update", state_partitions=4)
+        # 4 state partitions, pinned for this run only: enough to exercise
+        # the RocksDB open/commit machinery per batch without the 32-task
+        # scheduling noise that made the canary's own variance rival the
+        # signal
+        with runner._scoped_conf(spark, {"ksl.state.partitions": "4"}):
+            runner.run_to_memory(counted, name, "update")
         if i:
             samples.append(time.time() - t0)
         spark.catalog.dropTempView(name)

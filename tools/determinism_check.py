@@ -12,7 +12,7 @@ contracts exist to prevent) fails here even though a single-setting
 oracle run could pass by luck.
 
 Streaming rows are skipped: their state-shard invariance is covered by
-the dedicated checkpoint/recovery and `state_partitions` tests.
+the dedicated checkpoint/recovery and state-sizing tests.
 
 Usage: python tools/determinism_check.py [sf_dir] [p1] [p2]
 (defaults: sf0.001, 32, 5). Exits 1 on any mismatch.

@@ -156,7 +156,7 @@ def check_split_parity(spark) -> dict:
             )
             out = build(stream, mc)
             name = f"skewprobe_{op_name}_{'split' if mc != 2**62 else 'full'}"
-            runner.run_to_memory(out, name, "append", state_partitions=8)
+            runner.run_to_memory(out, name, "append")
             rows = sorted(map(tuple, spark.table(name).collect()))
             _drop_sink_views(spark)
             outs.append(rows)

@@ -10,9 +10,9 @@ exactly like bench.py so timings measure the engine.
 
 Variants:
   base     — the shipped defaults (RocksDB provider, changelog
-             checkpointing, STATE_SHARDS=8 via the catalog hint)
+             checkpointing, STATE_SHARDS=8 derived by the runner)
   shards4 / shards2 / shards1
-           — pin ksl.state.partitions (wins over the catalog hint):
+           — pin ksl.state.partitions (wins over the derived count):
              is 8 still too many live RocksDB instances for KB-state?
   notrack  — RocksDB trackTotalNumberOfRows=false: drops the per-commit
              row-count maintenance (metrics-only feature, puts/gets
